@@ -34,10 +34,10 @@ object SparkEntry {
       (SimilarityQueries.queries, SimilarityQueries.oracles),
       (graft.multimodal.Multimodal.queries, graft.multimodal.Multimodal.oracles))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     registries.map(_._1).reduce(_ ++ _)
 
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     registries.map(_._2).reduce(_ ++ _)
 
   /** Queries that have NO DuckDB oracle BY DESIGN — genuinely

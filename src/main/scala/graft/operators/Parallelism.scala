@@ -19,9 +19,14 @@ import org.apache.spark.sql.DataFrame
   */
 object Parallelism {
   def floor(df: DataFrame): DataFrame = {
-    val n = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(32)
+    val n = shufflePartitions(df)
     if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
   }
+
+  /** `spark.sql.shuffle.partitions` of `df`'s session, the one place
+    * graft reads it. Spark rejects a non-integer value when it is set
+    * (SessionsSpec pins that), so there is no non-numeric case to fall
+    * back from. */
+  def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 }

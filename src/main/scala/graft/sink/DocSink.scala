@@ -1,7 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.DataFrame
 
 /** The reference's two sink strategies (its raison d'être), Spark-first.
   *
@@ -47,6 +46,14 @@ object DocSink {
     md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
   }
 
+  /** Feed-idempotency key of one flush: the writer's per-attempt-stable
+    * `flushKey` (job/query, partition, flush ordinal) plus the flush's
+    * [[contentKey]]. Every Spark-side sink commits through this key —
+    * [[writeBatched]] and the DSv2 writer alike. */
+  private[graft] def feedKey(flushKey: String,
+      docs: Seq[(String, Map[String, Long])]): String =
+    s"$flushKey/c${contentKey(docs)}"
+
   /** Batched sink — intended O7 semantics. Expects a 2-column DataFrame
     * (docId: string, value: long); writes `{fieldName: value}` keyed by
     * docId, flushing atomically every `batchSize` docs, remainder at close.
@@ -83,7 +90,6 @@ object DocSink {
     val spark = df.sparkSession
     val docsWritten = spark.sparkContext.longAccumulator("docsWritten")
     val batchesCommitted = spark.sparkContext.longAccumulator("batchesCommitted")
-    val flushNanos = spark.sparkContext.longAccumulator("flushNanos")
     val rows = df.toDF("docId", "value")
     val key = jobKey.getOrElse(java.util.UUID.randomUUID().toString)
     rows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -96,14 +102,9 @@ object DocSink {
             val docs = group.map { r =>
               r.getString(0) -> Map(fieldName -> r.getLong(1))
             }.toSeq
-            val t0 = System.nanoTime()
             store.commitBatchKeyed(
-              s"$key/p$pid/f$flushSeq/c${contentKey(docs)}",
-              collection, docs)
+              feedKey(s"$key/p$pid/f$flushSeq", docs), collection, docs)
             flushSeq += 1
-            // per-flush latency — the reference logs this in ms per flush
-            // (FirestoreUpdateDoFn.java:83,92-93)
-            flushNanos.add(System.nanoTime() - t0)
             docsWritten.add(docs.size)
             batchesCommitted.add(1)
           }
@@ -113,40 +114,19 @@ object DocSink {
     (docsWritten.value, batchesCommitted.value)
   }
 
-  /** Naive sink — one blocking put per element
-    * (impl/NaiveImplementation.java:55-60). Even "naive" in Spark amortizes
-    * the client per partition: a per-element client (what the reference's
-    * naive impl does at :49-53) is the anti-pattern the reference exists to
-    * demonstrate, and would be pure overhead here.
+  /** Naive sink — one blocking single-doc commit per element
+    * (impl/NaiveImplementation.java:55-60): the batched sink with a batch
+    * of one, so each element gets its own retry-safe feed key. Even
+    * "naive" in Spark amortizes the client per partition: a per-element
+    * client (what the reference's naive impl does at :49-53) is the
+    * anti-pattern the reference exists to demonstrate, and would be pure
+    * overhead here.
     */
   def writeNaive(
       df: DataFrame,
       factory: DocumentStoreFactory,
       collection: String,
       fieldName: String = "count",
-      jobKey: Option[String] = None): Long = {
-    val docsWritten = df.sparkSession.sparkContext.longAccumulator("docsWritten")
-    val key = jobKey.getOrElse(java.util.UUID.randomUUID().toString)
-    df.toDF("docId", "value").foreachPartition {
-      (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var i = 0L
-          val store = factory.open()
-          // one blocking single-doc commit per element (= the reference's
-          // per-element `put`), keyed per element for retry-safe feeds;
-          // the content term matters here exactly as in writeBatched —
-          // a reordered retry's element e0 holds a DIFFERENT doc, and
-          // suppressing it by ordinal alone would lose its feed entry
-          try it.foreach { r =>
-            val doc = Seq(r.getString(0) -> Map(fieldName -> r.getLong(1)))
-            store.commitBatchKeyed(
-              s"$key/p$pid/e$i/c${contentKey(doc)}", collection, doc)
-            i += 1
-            docsWritten.add(1)
-          } finally store.close()
-        }
-    }
-    docsWritten.value
-  }
+      jobKey: Option[String] = None): Long =
+    writeBatched(df, factory, collection, batchSize = 1, fieldName, jobKey)._1
 }

@@ -18,11 +18,11 @@ import scala.jdk.CollectionConverters._
   * remote store plugs in unchanged.
   *
   * Semantics pinned by the reference:
-  *  - `put` is a keyed upsert (`DocumentReference.set`, last-write-wins —
-  *    impl/NaiveImplementation.java:55-60) => idempotent, safe under Spark
-  *    task retries (at-least-once delivery converges to effectively-once
-  *    state).
-  *  - `commitBatch` commits a buffered group of ≤ maxBatchSize puts
+  *  - each document write is a keyed upsert (`DocumentReference.set`,
+  *    last-write-wins — impl/NaiveImplementation.java:55-60) => idempotent,
+  *    safe under Spark task retries (at-least-once delivery converges to
+  *    effectively-once state).
+  *  - `commitBatch` commits a buffered group of ≤ maxBatchSize upserts
   *    atomically (the *intended* semantics of FirestoreUpdateDoFn.java:78-95;
   *    see SURVEY.md §2.1 fidelity note).
   */
@@ -41,10 +41,6 @@ trait DocumentStore extends AutoCloseable {
   def commitBatchKeyed(key: String, collection: String,
                        docs: Seq[(String, Map[String, Long])]): Unit =
     commitBatch(collection, docs)
-  /** Single-document blocking upsert (the naive path,
-    * impl/NaiveImplementation.java:55-60). */
-  def put(collection: String, docId: String, fields: Map[String, Long]): Unit =
-    commitBatch(collection, Seq(docId -> fields))
   def close(): Unit = ()
 }
 

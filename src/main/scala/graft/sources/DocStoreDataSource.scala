@@ -127,8 +127,8 @@ case class DocStoreWriterFactory(root: String, maxBatchSize: Int,
           val docs = rows.toSeq.map { case (_, id, n) =>
             id -> Map("count" -> n) }
           store.commitBatchKeyed(
-            s"$queryId/p$partitionId/f$flushSeq/$collection" +
-              s"/c${graft.sink.DocSink.contentKey(docs)}",
+            graft.sink.DocSink.feedKey(
+              s"$queryId/p$partitionId/f$flushSeq/$collection", docs),
             collection, docs)
         }
         flushSeq += 1

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: formatted physical plans for representative queries —
   * the artifact backing the "audit every plan" design rule. */
@@ -57,10 +56,7 @@ object DumpPlans {
     "stats_ks_drift" -> "exact KS drift, fully lazy: percentile_approx boundary array broadcast-crossed onto the distinct-value grid (no driver stats job at construction); running CDFs via broadcast bucket offsets + in-bucket windows")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-dumpplans")
     val d = "/root/testdata/sf0.01"
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of representative queries (sf0.01, auto-generated by graft.tools.DumpPlans)\n\n")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: inspect or time registered queries by name.
   *
   *   QueryDebug explain <query>[,query...] [sfDir]   — physical plan dump
@@ -28,11 +26,7 @@ object QueryDebug {
     val outDir = args(1)
     val suffix = args(2)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-querydebug")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
@@ -49,11 +43,7 @@ object QueryDebug {
     * dump for a subset — iterating on ONE oracle without a full Verify. */
   private def dump(args: Array[String]): Unit = {
     val Array(sfDir, names, outDir) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-querydebug")
     for (n <- names.split(","))
       graft.SparkEntry.queries(n)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$n")
@@ -119,11 +109,8 @@ object QueryDebug {
     * that failed to plan (a broken audit must not read as a passing
     * one). */
   private def audit(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-querydebug",
+      "spark.sql.adaptive.enabled" -> "false")
     // Walk build plans too: skipping localCheckpoint keeps index-build
     // lineage in the plan, so exchanges below materialization points —
     // the round-5 audit blind spot — are flagged like any other. The
@@ -199,10 +186,7 @@ object QueryDebug {
   }
 
   private def explain(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("graft-querydebug")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     for (n <- args(0).split(",")) {
       println(s"===== $n")
@@ -216,12 +200,7 @@ object QueryDebug {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-querydebug")
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => }
     // Contention-proof work counters per rep: the box's roaming
     // bandwidth co-tenant makes wall-clock A/Bs swing ±50%, while job/

@@ -22,6 +22,10 @@ class EntrySpec extends SparkSpec {
       s"no oracle and no rows-only pin: ${unaccounted.toSeq.sorted}")
   }
 
+  test("registry maps are built once, not re-merged per call") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+  }
+
   test("rows-only pins name existing spec suites") {
     val specDir = new java.io.File("src/test/scala/graft")
     val suites = specDir.listFiles().map(_.getName.stripSuffix(".scala")).toSet
